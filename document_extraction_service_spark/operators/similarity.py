@@ -18,12 +18,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tables import read_table
+from .tables import read_table, top_k
 
+# Every scored set below has one row per (query_id, neighbor_id), so
+# (cosine desc, neighbor_id asc) is the total order top_k needs.
 TOP_K = 5
 N_QUERIES = 10          # vec_id < 10 are the query vectors
 # multi-table random-hyperplane LSH: for neighbours at cosine ~0.33
@@ -46,15 +48,6 @@ LSH_TABLES = 12
 LSH_TARGET_BUCKET_POP = 32
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
-
-
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -66,39 +59,12 @@ def _cos(av, bv):
     return dot / (na * nb)
 
 
-def _two_stage_topk(scored: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Two-stage top-k per query: a single Window.partitionBy("query_id")
-    would funnel each query's whole scored candidate set through ONE
-    task (≤ N_QUERIES partitions regardless of cluster size).  Stage 1
-    takes top-k within (query_id, input-partition) — every window group
-    is at most one scan partition's rows — stage 2 merges only k·P
-    survivors per query.  Requires `scored` columns (query_id,
-    neighbor_id, cosine) with neighbor_id unique per query (the
-    (cosine desc, neighbor_id asc) order is then total, so both stages
-    are deterministic)."""
-    local = scored.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("query_id", "part").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    pre = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= k)
-        .drop("part", "lr")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
 def ann_topk_bruteforce(spark, sf_dir):
     """Exact top-k cosine neighbours for the first N_QUERIES vectors.
     The query side is tiny -> broadcast; the corpus side streams, so on
     a cluster this is a map-only scan of the corpus (no shuffle of the
     embedding payload)."""
-    e = _t(spark, sf_dir, "embeddings", wide=True).select(
+    e = read_table(spark, sf_dir, "embeddings", wide=True).select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     )
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -112,7 +78,9 @@ def ann_topk_bruteforce(spark, sf_dir):
         # (CLAUDE.md gotcha: ROUND ties HALF_UP Spark vs half-even DuckDB)
         (F.floor(_cos(F.col("qv"), F.col("v")) * 1e6) / 1e6).alias("cosine"),
     )
-    return _two_stage_topk(scored)
+    return top_k(
+        scored, TOP_K, [F.desc("cosine"), F.asc("neighbor_id")], by=["query_id"]
+    ).select("query_id", "rank", "neighbor_id", "cosine")
 
 
 SQL_ANN_TOPK = f"""
@@ -139,7 +107,7 @@ def ann_topk_filtered(spark, sf_dir):
     the query side broadcasts with its label, the corpus side streams
     map-only, and the label equality prunes ~(1/n_labels) of the
     candidate space before any cosine is computed."""
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double(F.col("embedding")).alias("v")
     )
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
@@ -157,7 +125,9 @@ def ann_topk_filtered(spark, sf_dir):
         F.col("vec_id").alias("neighbor_id"),
         (F.floor(_cos(F.col("qv"), F.col("v")) * 1e6) / 1e6).alias("cosine"),
     )
-    return _two_stage_topk(scored)
+    return top_k(
+        scored, TOP_K, [F.desc("cosine"), F.asc("neighbor_id")], by=["query_id"]
+    ).select("query_id", "rank", "neighbor_id", "cosine")
 
 
 SQL_ANN_FILTERED = f"""
@@ -272,7 +242,7 @@ def lsh_candidates(spark, sf_dir, tables: int = LSH_TABLES,
     side multi-probes its own bucket plus all hamming-1 buckets per
     table to buy back the recall extra planes cost (math at the top
     constants)."""
-    e_raw = _t(spark, sf_dir, "embeddings")
+    e_raw = read_table(spark, sf_dir, "embeddings")
     if planes is None:
         # cached corpus count: zero Spark jobs after the first build
         planes = _auto_planes(_corpus_n(e_raw, f"{sf_dir}/embeddings.parquet"))
@@ -332,9 +302,9 @@ def ann_lsh_bucketed(spark, sf_dir, tables: int = LSH_TABLES,
 
     The 10^12-scale path: corpus-scaled planes keep buckets selective
     (see lsh_candidates); signatures are one numpy matmul per Arrow
-    batch; rerank is partition-local top-k then a k·P merge, no
-    single-task funnel.  Oracle: pinned pure-Python replay (numpy
-    signatures + left-fold cosine rerank, scripts/replay_sketches.py —
+    batch; the rerank's `top_k` has no single-task funnel.  Oracle:
+    pinned pure-Python replay (numpy signatures + left-fold cosine
+    rerank, scripts/replay_sketches.py —
     full value verification); recall vs brute force additionally
     asserted in tests at two (planes, tables) points."""
     cand = lsh_candidates(spark, sf_dir, tables=tables, planes=planes)
@@ -343,7 +313,9 @@ def ann_lsh_bucketed(spark, sf_dir, tables: int = LSH_TABLES,
         "neighbor_id",
         (F.floor(_cos(F.col("qv"), F.col("v")) * 1e6) / 1e6).alias("cosine"),
     )
-    return _two_stage_topk(scored)
+    return top_k(
+        scored, TOP_K, [F.desc("cosine"), F.asc("neighbor_id")], by=["query_id"]
+    ).select("query_id", "rank", "neighbor_id", "cosine")
 
 
 # --- IVF (inverted-file) ANN: the coarse-quantizer scale path ---------------
@@ -359,7 +331,7 @@ def _ivf_centroids(spark, sf_dir):
     next to the table; the assignment/probe machinery below is
     identical either way, and a deterministic sample keeps the whole
     operator replayable (no RNG, no iterative state)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     rows = (
         e.filter(F.col("vec_id") % IVF_CENTROID_STRIDE == 0)
         .orderBy("vec_id")
@@ -395,7 +367,7 @@ def ann_ivf(spark, sf_dir):
             return pd.Series([], dtype="int32")
         return pd.Series(cell_ids[np.argmax(mat @ cmat, axis=1)])
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     assigned = e.select(
         "vec_id", _as_double(F.col("embedding")).alias("v"),
         assign(F.col("embedding")).alias("cell"),
@@ -427,7 +399,9 @@ def ann_ivf(spark, sf_dir):
         )
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    return _two_stage_topk(cand)
+    return top_k(
+        cand, TOP_K, [F.desc("cosine"), F.asc("neighbor_id")], by=["query_id"]
+    ).select("query_id", "rank", "neighbor_id", "cosine")
 
 
 QUERIES = {

@@ -1,9 +1,9 @@
-"""Shared parquet table reader for the operator modules — with an
-OPT-IN scan-width guard for parallelism-starved inputs (guide §2.5
-"input skew: one huge unsplittable file … repartition immediately
-after the read").
+"""Shared helpers for the operator modules: the parquet table reader,
+with an OPT-IN scan-width guard for parallelism-starved inputs (guide
+§2.5 "input skew: one huge unsplittable file … repartition
+immediately after the read"), and the two-stage `top_k`.
 
-Why it exists (r7): a parquet table written as ONE small file (or one
+Why the guard exists (r7): a parquet table written as ONE small file (or one
 row group) yields ONE scan partition no matter the session width —
 `spark.sql.files.openCostInBytes` floors the split size at 4 MB, and
 row groups cannot split below their boundaries — so EVERY map-side
@@ -45,8 +45,10 @@ top-k windows carry total orders — the package determinism contract).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 # The openCostInBytes split-size floor: an input below width x this
 # cannot reach `width` scan partitions, however it is configured.
@@ -96,3 +98,42 @@ def read_table(
     if not wide:
         return df
     return widen_narrow_scan(df, path)
+
+
+def top_k(
+    df: DataFrame, k: int, order: Sequence[Column], by: Sequence[str] = ()
+) -> DataFrame:
+    """The first `k` rows of each `by` group of `df` (of the whole frame
+    when `by` is empty) under `order`: `df`'s columns plus an int
+    `rank`, the 1-based `row_number` within the group.
+
+    Two stages, so no task sorts a whole group.  One window over `by`
+    would funnel each group through ONE task, and a group is a skewed
+    key at crawl scale (a language, a query vector, the whole
+    vocabulary when `by=()`).  Stage 1 ranks within (by…, input
+    partition) and keeps each window's top k: a group is spread over
+    as many windows as `df` has partitions, and a row outside its
+    partition's top k cannot be in its group's top k.  Stage 2 ranks
+    the survivors over `by`, so it sees at most k·P rows per group for
+    P input partitions, however large the group is.
+
+    `order` must be total within a group (end it with a unique key,
+    e.g. count desc then token asc).  On ties `row_number` picks by
+    arrival order, which depends on the partitioning, and the result
+    would differ between runs and retries.
+
+    With `by=()` stage 2 is a window with no partition spec, and Spark
+    logs `WindowExec: No Partition Defined for Window operation!
+    Moving all data to a single partition`.  Here that is bounded and
+    harmless: the single partition holds the k·P stage-1 survivors,
+    not the frame.
+    """
+    wl = Window.partitionBy(*by, "_topk_part").orderBy(*order)
+    pre = (
+        df.withColumn("_topk_part", F.spark_partition_id())
+        .withColumn("_topk_lr", F.row_number().over(wl))
+        .filter(F.col("_topk_lr") <= k)
+        .drop("_topk_part", "_topk_lr")
+    )
+    w = Window.partitionBy(*by).orderBy(*order)
+    return pre.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

@@ -12,10 +12,10 @@ so both engines produce bit-identical doubles before ROUND.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .tables import read_table
+from .tables import read_table, top_k
 
 # stopword marker lists for the langid heuristic (checked as whole words)
 LANG_MARKERS = {
@@ -26,15 +26,6 @@ LANG_MARKERS = {
 }
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 TOKEN_RE_SPARK = TOKEN_RE.replace("\\", "\\\\")  # Spark SQL literal escaping
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, wide: bool = False
-) -> DataFrame:
-    # shared reader; wide=True opts into the width-guarded scan
-    # redistribution for fold/parse-heavy single-pass queries
-    # (see operators/tables.py for the A/B and the scale guard)
-    return read_table(spark, sf_dir, name, wide)
 
 
 def _marker_hits(lang: str):
@@ -49,7 +40,7 @@ def text_langid(spark, sf_dir):
     """N-gram/stopword language-ID heuristic: argmax of marker-word
     hits with a fixed precedence tie-break (en > de > fr > es >
     unknown).  At 10^12 rows this is a pure map — no shuffle."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     hits = {lang: _marker_hits(lang).alias(f"{lang}_hits") for lang in LANG_MARKERS}
     scored = d.select("doc_id", *hits.values())
     best = F.greatest(*[F.col(f"{lg}_hits") for lg in LANG_MARKERS])
@@ -87,7 +78,7 @@ FROM s
 def text_quality(spark, sf_dir):
     """Quality score from length / stopword ratio / mean word length —
     rational arithmetic only (cross-engine bit-identical)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     n_words = F.size(F.split(F.trim(F.col("text")), " "))
     n_alpha = F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z]", ""))
     stop_hits = _marker_hits("en")
@@ -125,7 +116,7 @@ FROM s
 def text_tokens(spark, sf_dir):
     """Token counting: whitespace tokens + a BPE-ish regex tokenizer
     (letters / digits / single punctuation)."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens_ws"),
@@ -147,7 +138,7 @@ def text_fingerprint(spark, sf_dir):
     """Content fingerprint: md5 over the normalized token stream
     (lowercase, punctuation stripped, whitespace collapsed) — the
     canonical-form dedup key for a 10^12-row exact-dedup pass."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9 ]", " "), r" +", " "
@@ -186,7 +177,7 @@ def text_rolling_fingerprint(spark, sf_dir):
     hash — unlike the md5 canonical-form fingerprint, the fold
     structure extends to streaming/incremental use (append a token =
     one multiply-add).  Pure map at any scale."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     tok_val = F.transform(
         toks,
@@ -231,34 +222,20 @@ def text_top_ngrams(spark, sf_dir):
 
     Scale shape: the (lang, shingle) count is ONE hash aggregation with
     map-side partial combine (only distinct (lang, shingle) partials
-    cross the shuffle); per-lang top-K uses the same two-stage pattern
-    as the ANN reranks — partition-local row_number, then a merge over
-    K·P survivors — so no single task ever sorts a language's whole
-    n-gram distribution (a language IS a skewed key at crawl scale).
+    cross the shuffle); per-lang top-K is `top_k`, so no single task
+    sorts a language's whole n-gram distribution.
     Tie-break (count desc, trigram asc) is total -> deterministic."""
-    from pyspark.sql import Window
-
     from .dedup import _shingle_array
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     counts = (
         d.select("lang", F.explode(_shingle_array()).alias("trigram"))
         .groupBy("lang", "trigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    local = counts.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("lang", "part").orderBy(F.desc("n"), F.asc("trigram"))
-    pre = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= TOP_NGRAMS_K)
-        .drop("part", "lr")
-    )
-    w = Window.partitionBy("lang").orderBy(F.desc("n"), F.asc("trigram"))
-    return (
-        pre.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_NGRAMS_K)
-        .select("lang", "rank", "trigram", "n")
-    )
+    return top_k(
+        counts, TOP_NGRAMS_K, [F.desc("n"), F.asc("trigram")], by=["lang"]
+    ).select("lang", "rank", "trigram", "n")
 
 
 # same shingle construction as SQL_JACCARD's sh CTE, but NOT distinct
@@ -302,7 +279,7 @@ def text_redact_pii(spark, sf_dir):
     web_url_canonicalize pattern).  Order matters: IPs redact before
     phones (disjoint here), emails first so their dotted hosts are not
     half-eaten by the IP pattern."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     raw = F.concat(
         F.substring(F.col("text"), 1, 60),
         F.lit(" contact user"), F.col("doc_id").cast("string"),
@@ -452,7 +429,7 @@ def text_repetition(spark, sf_dir):
 
     Pure map (JVM higher-order functions, no shuffle, no Python) — at
     10^12 rows this costs one scan."""
-    d = _t(spark, sf_dir, "documents", wide=True)
+    d = read_table(spark, sf_dir, "documents", wide=True)
     toks = F.split(F.col("text"), " ")
     return d.select(
         "doc_id",
@@ -515,40 +492,23 @@ def rarity_scores(d: DataFrame) -> DataFrame:
 
     Scale shape: token counting is ONE hash aggregation with map-side
     combine (distinct tokens per partition cross the shuffle, not
-    occurrences); the vocabulary is truncated to VOCAB_TOP via the
-    same two-stage top-K as text_top_ngrams (partition-local
-    row_number, then a merge over <= K*P survivors — no task ever
-    sorts the full type/token distribution); the scoring join
+    occurrences); the vocabulary is truncated to VOCAB_TOP by `top_k`
+    (no task sorts the full type/token distribution); the scoring join
     BROADCASTS the <= VOCAB_TOP-row vocabulary, so per-doc scoring is
     a map-side join + one (doc_id)-keyed agg whose map-side combine
     reduces each doc to a single partial before the shuffle.  Nothing
     here is proportional to corpus size except the two scans.
     Deterministic: rank ties break (count desc, token asc) — total
     order."""
-    from pyspark.sql import Window
-
     toks = d.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), " ")).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
-    local = counts.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("tok"))
-    pre = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= VOCAB_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at VOCAB_TOP * n_partitions rows
-    # by the local stage above (the two-stage top-k contract)
-    w = Window.partitionBy().orderBy(F.desc("n"), F.asc("tok"))
-    rank = F.row_number().over(w)
     band = sum(
         (F.col("rank") > t).cast("int") for t in RARITY_BANDS
     )
-    vocab = (
-        pre.withColumn("rank", rank)
-        .filter(F.col("rank") <= VOCAB_TOP)
-        .select("tok", band.alias("band"))
+    vocab = top_k(counts, VOCAB_TOP, [F.desc("n"), F.asc("tok")]).select(
+        "tok", band.alias("band")
     )
     j = toks.join(F.broadcast(vocab), "tok", "left")
     b = F.coalesce(F.col("band"), F.lit(OOV_BAND))
@@ -564,7 +524,7 @@ def rarity_scores(d: DataFrame) -> DataFrame:
 
 def text_rarity(spark, sf_dir):
     """Driver entry: rarity_scores over the documents table."""
-    return rarity_scores(_t(spark, sf_dir, "documents"))
+    return rarity_scores(read_table(spark, sf_dir, "documents"))
 
 
 _SQL_BAND = " + ".join(
@@ -615,14 +575,11 @@ def text_lm_score(spark, sf_dir):
     Scale shape: the bigram count is ONE hash agg with map-side
     combine; prefix totals are a second agg over the (distinct-bigram)
     count table, not the occurrence stream; the model is truncated by
-    the two-stage top-K (partition-local row_number, merge over <=
-    K*P survivors) and the <=LM_TOP-row table BROADCASTS into the
+    `top_k` and the <=LM_TOP-row table BROADCASTS into the
     scoring join, so per-doc scoring is map-side + one doc_id-keyed
     agg on the job's own shard key.  Deterministic: ties break
     (count desc, gram asc)."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     # the gram stream feeds BOTH the model-count pass and the scoring
     # join: localCheckpoint (lazy) builds the _word_ngrams arrays once
     # instead of once per consumer (r7 — the line_dedup shared-build
@@ -637,20 +594,7 @@ def text_lm_score(spark, sf_dir):
     pre = c.groupBy(w1).agg(F.sum("n").alias("np")).filter(
         F.col("np") >= LM_MIN_PREFIX
     )
-    local = c.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("gram"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= LM_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at LM_TOP * n_partitions rows
-    wg = Window.partitionBy().orderBy(F.desc("n"), F.asc("gram"))
-    top = (
-        cand.withColumn("r", F.row_number().over(wg))
-        .filter(F.col("r") <= LM_TOP)
-        .select("gram", "n", w1)
-    )
+    top = top_k(c, LM_TOP, [F.desc("n"), F.asc("gram")]).select("gram", "n", w1)
     tbl = pre.join(F.broadcast(top), "w1").select(
         "gram", F.expr(f"({LM_SCALE} * n) div np").alias("p")
     )
@@ -706,12 +650,10 @@ def corpus_drift(spark, sf_dir):
     Scale shape: one token-count agg with map-side combine producing
     per-side counts in the same pass (conditional sums — the corpus is
     scanned ONCE); totals are a one-row agg broadcast back; drift
-    ranking uses the two-stage top-K so no task sorts the full
-    vocabulary; tvd is an agg over the vocab-sized count table, not
-    the occurrence stream."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
+    ranking uses `top_k` so no task sorts the full vocabulary; tvd is
+    an agg over the vocab-sized count table, not the occurrence
+    stream."""
+    d = read_table(spark, sf_dir, "documents")
     toks = d.select(
         (F.col("doc_id") % DRIFT_BATCH_MOD == 0).alias("is_new"),
         F.explode(F.split(F.col("text"), " ")).alias("tok"),
@@ -720,8 +662,8 @@ def corpus_drift(spark, sf_dir):
         F.sum(F.col("is_new").cast("long")).alias("cn"),
         F.sum((~F.col("is_new")).cast("long")).alias("co"),
     )
-    # the count table feeds four consumers (totals, tvd, top-k local +
-    # merge); without a checkpoint each branch re-scans the corpus —
+    # the count table feeds four consumers (totals, tvd, both top_k
+    # stages); without a checkpoint each branch re-scans the corpus —
     # localCheckpoint (lazy) bounds materialization at vocab size and
     # keeps the corpus scan at exactly one
     c = c.localCheckpoint(eager=False)
@@ -736,19 +678,7 @@ def corpus_drift(spark, sf_dir):
         .withColumn("drift", F.abs(F.col("p_batch") - F.col("p_corpus")))
     )
     tvd = p.agg(F.expr("sum(drift) div 2").cast("long").alias("tvd"))
-    local = p.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("drift"), F.asc("tok"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= DRIFT_TOP)
-        .drop("part", "lr")
-    )
-    wg = Window.partitionBy().orderBy(F.desc("drift"), F.asc("tok"))
-    top = (
-        cand.withColumn("r", F.row_number().over(wg))
-        .filter(F.col("r") <= DRIFT_TOP)
-        .drop("r")
-    )
+    top = top_k(p, DRIFT_TOP, [F.desc("drift"), F.asc("tok")])
     return top.crossJoin(F.broadcast(tvd)).select(
         "tok", "p_batch", "p_corpus", "drift", "tvd"
     )
@@ -867,13 +797,9 @@ def text_bpe_merges(spark, sf_dir):
     first (one combine-enabled agg; Zipf-bounded — vocabulary grows
     ~sqrt of corpus), pairs explode over distinct words only with the
     count as weight (never over the token stream), and the top-K is
-    the two-stage pattern (partition-local row_number, single-task
-    merge over <= K*P survivors — the text_lm_score contract).  The
-    pair lambda indexes a plain COLUMN, not a derived array (gotcha
-    #19).  Deterministic: ties break (n desc, pair asc)."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
+    `top_k`.  The pair lambda indexes a plain COLUMN, not a derived
+    array (gotcha #19).  Deterministic: ties break (n desc, pair asc)."""
+    d = read_table(spark, sf_dir, "documents")
     words = d.select(
         F.explode(F.split(F.trim(F.col("text")), " ")).alias("w")
     ).filter(F.length("w") >= 2)
@@ -886,19 +812,8 @@ def text_bpe_merges(spark, sf_dir):
         ).alias("pair"),
     )
     pc = pairs.groupBy("pair").agg(F.sum("c").alias("n"))
-    local = pc.withColumn("part", F.spark_partition_id())
-    wl = Window.partitionBy("part").orderBy(F.desc("n"), F.asc("pair"))
-    cand = (
-        local.withColumn("lr", F.row_number().over(wl))
-        .filter(F.col("lr") <= BPE_TOP)
-        .drop("part", "lr")
-    )
-    # single-task merge window, bounded at BPE_TOP * n_partitions rows
-    wg = Window.partitionBy().orderBy(F.desc("n"), F.asc("pair"))
-    return (
-        cand.withColumn("rank", F.row_number().over(wg).cast("long"))
-        .filter(F.col("rank") <= BPE_TOP)
-        .select("pair", "n", "rank")
+    return top_k(pc, BPE_TOP, [F.desc("n"), F.asc("pair")]).select(
+        "pair", "n", F.col("rank").cast("long").alias("rank")
     )
 
 

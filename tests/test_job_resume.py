@@ -134,19 +134,22 @@ def test_job_counts_fallback_rows(spark, dirs, tmp_path):
     assert not got["https://a/x"]["status"]["fallback"]
 
 
-def test_write_options_env_override(monkeypatch):
-    """SPARK_GRAFT_WRITE_OPTS merges over the tuned defaults (the A/B
-    harness contract); empty env returns the defaults verbatim."""
-    from document_extraction_service_spark.job import DEFAULT_WRITE_OPTS, write_options
+def test_output_is_zstd_without_dictionaries(spark, dirs):
+    """The tuned write options reach the files: every column chunk of
+    an output file is zstd-compressed and has no dictionary page."""
+    import glob
 
-    monkeypatch.delenv("SPARK_GRAFT_WRITE_OPTS", raising=False)
-    assert write_options() == DEFAULT_WRITE_OPTS
-    assert write_options() is not DEFAULT_WRITE_OPTS  # caller-safe copy
+    import pyarrow.parquet as pq
 
-    monkeypatch.setenv("SPARK_GRAFT_WRITE_OPTS",
-                       "compression=snappy, parquet.block.size = 16777216")
-    got = write_options()
-    assert got["compression"] == "snappy"
-    assert got["parquet.block.size"] == "16777216"
-    # untouched defaults survive the merge
-    assert got["parquet.enable.dictionary"] == "false"
+    out, lin = dirs
+    run_job(spark, f"synthetic:{N}", out, lin, "t-fmt", n_buckets=BUCKETS)
+    path = sorted(glob.glob(f"{out}/bucket=*/*.parquet"))[0]
+    meta = pq.ParquetFile(path).metadata
+    chunks = [
+        meta.row_group(g).column(c)
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    ]
+    assert chunks
+    assert {ch.compression for ch in chunks} == {"ZSTD"}
+    assert not any(ch.has_dictionary_page for ch in chunks)

@@ -43,3 +43,24 @@ def test_spark_submit_pyfiles_job(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert "'n_ok': 60" in r.stdout, r.stdout[-1500:]
+
+
+def test_one_helper_per_pattern():
+    """The two-stage top-k lives only in operators.tables.top_k, and
+    no module wraps tables.read_table in a private `_t` shim."""
+    pkg = os.path.join(REPO, "document_extraction_service_spark")
+    partition_id_users, shims = [], []
+    for root, _dirs, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            if "spark_partition_id" in src:
+                partition_id_users.append(rel)
+            if "def _t(" in src:
+                shims.append(rel)
+    assert partition_id_users == [os.path.join("operators", "tables.py")]
+    assert shims == []
