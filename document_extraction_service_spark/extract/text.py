@@ -13,11 +13,21 @@ the constants in textops.py.
 from __future__ import annotations
 
 from collections import Counter
+from operator import sub
 
 from . import textops as X
 
 
-def _header_like(blocks, k) -> bool:
+def block_words(blocks) -> list[int]:
+    """Word count of each block, ``len(b.text.split())``.  Block text is
+    whitespace-normalized by the parser (``htmlparse._norm_ws``): words
+    joined by single spaces, no other whitespace, never empty — so
+    counting spaces is exact, and one C-level pass instead of a split
+    of a possibly megabyte-long block."""
+    return [b.text.count(" ") + 1 for b in blocks]
+
+
+def _header_like(blocks, k, words) -> bool:
     """Non-markup header detection (reference _identify_headers,
     text_api.py:285-356): a short, link-free block becomes a heading
     when it is
@@ -36,12 +46,14 @@ def _header_like(blocks, k) -> bool:
     Gates shared with the reference: < HEADER_MAX_WORDS words
     (text_api.py:313), > HEADER_MIN_CHARS non-space chars
     (text_api.py:317).
+
+    ``words[k]`` is the word count of ``blocks[k]`` (``block_words``).
     """
     b = blocks[k]
-    words = X.n_words(b.text)
-    if words >= X.HEADER_MAX_WORDS or b.n_link_chars > 0:
+    if words[k] >= X.HEADER_MAX_WORDS or b.n_link_chars > 0:
         return False
-    if len(b.text.replace(" ", "")) <= X.HEADER_MIN_CHARS:
+    # non-space chars: the text has words[k] - 1 single spaces
+    if b.n_chars - words[k] + 1 <= X.HEADER_MIN_CHARS:
         return False
     if X.is_common_header(b.text):
         return True
@@ -49,7 +61,7 @@ def _header_like(blocks, k) -> bool:
     next_is_content = (
         nxt is not None
         and not nxt.in_chrome
-        and X.n_words(nxt.text) >= X.MIN_CONTENT_WORDS
+        and words[k + 1] >= X.MIN_CONTENT_WORDS
     )
     if not next_is_content:
         return False
@@ -60,6 +72,19 @@ def _header_like(blocks, k) -> bool:
         if prev is not None and prev.text.endswith("."):
             return True
     return False
+
+
+# chars the bucketed fuzzy bound counts one by one (frequent letters and
+# the digits that tell "3 comments" from "4 comments"); all other chars
+# share one bucket
+_BUCKET_CHARS = "etaoinsrhl0123456789"
+
+
+def _char_buckets(key: str) -> list[int]:
+    """Count of each ``_BUCKET_CHARS`` char in key, then of all others."""
+    v = list(map(key.count, _BUCKET_CHARS))
+    v.append(len(key) - sum(v))
+    return v
 
 
 def _merge_fuzzy_groups(groups: dict[str, list[int]]) -> None:
@@ -88,15 +113,20 @@ def _merge_fuzzy_groups(groups: dict[str, list[int]]) -> None:
     # char-multiset counts per key: sum |count_a(c) - count_b(c)| lower-
     # bounds the weighted edit distance (each indel moves one count at
     # cost 1, each substitution moves two at cost 2), so most distinct
-    # pairs are pruned in O(alphabet) without touching the DP.  (A
-    # numpy-broadcast variant was measured SLOWER at realistic key
-    # counts (~60/doc): per-doc array overhead beats the dict loop.)
-    cnts = [Counter(k) for k in keys]
+    # pairs are pruned in O(alphabet) without touching the DP.  The
+    # same L1 over _char_buckets runs first: summing counts into buckets
+    # never raises |a - b|, so it is <= d_lb and rejects only pairs d_lb
+    # rejects, in a C-level map instead of a generator over a Counter.
+    # Counters are built only for pairs that pass it.  (A numpy-broadcast
+    # variant was measured SLOWER at realistic key counts (~12/doc):
+    # per-doc array overhead beats the Python loop.)
+    vecs = [_char_buckets(k) for k in keys]
+    cnts: list = [None] * len(keys)
     budget = X.FUZZY_MAX_COMPARISONS
     for i, a in enumerate(keys):
         if budget <= 0:
             break
-        ca = cnts[i]
+        va = vecs[i]
         la = len(a)
         for j in range(i + 1, len(keys)):
             b = keys[j]
@@ -105,7 +135,13 @@ def _merge_fuzzy_groups(groups: dict[str, list[int]]) -> None:
             kmax = (la + len(b) - 1) // 20
             if len(b) - la > kmax:
                 continue
-            cb = cnts[j]
+            if sum(map(abs, map(sub, va, vecs[j]))) > kmax:
+                continue
+            if cnts[i] is None:
+                cnts[i] = Counter(a)
+            if cnts[j] is None:
+                cnts[j] = Counter(b)
+            ca, cb = cnts[i], cnts[j]
             d_lb = sum(abs(cnt - cb.get(ch, 0)) for ch, cnt in ca.items())
             d_lb += sum(cnt for ch, cnt in cb.items() if ch not in ca)
             if d_lb > kmax:
@@ -138,6 +174,7 @@ def classify_blocks(blocks) -> list[str]:
     """
     n = len(blocks)
     labels = ["drop"] * n
+    words = block_words(blocks)
 
     exact_counts = Counter(b.text for b in blocks)
     fuzzy_groups: dict[str, list[int]] = {}
@@ -158,11 +195,10 @@ def classify_blocks(blocks) -> list[str]:
             continue
         if k in fuzzy_drop:
             continue
-        words = X.n_words(b.text)
         if (
-            words <= X.BOILER_MAX_WORDS
+            words[k] <= X.BOILER_MAX_WORDS
             and b.n_chars <= X.BOILER_MAX_CHARS
-            and any(p.search(b.text) for p in X.BOILER_PATTERNS)
+            and X.is_boilerplate(b.text)
         ):
             continue
         link_density = b.n_link_chars / max(b.n_chars, 1)
@@ -171,9 +207,9 @@ def classify_blocks(blocks) -> list[str]:
             seen_title = True
         elif b.heading >= 1:
             labels[k] = "heading"
-        elif _header_like(blocks, k):
+        elif _header_like(blocks, k, words):
             labels[k] = "heading"
-        elif words >= X.MIN_CONTENT_WORDS and link_density <= X.LINK_DENSITY_MAX:
+        elif words[k] >= X.MIN_CONTENT_WORDS and link_density <= X.LINK_DENSITY_MAX:
             labels[k] = "content"
         elif link_density <= X.LINK_DENSITY_MAX:
             labels[k] = "short"  # sandwich candidate

@@ -22,8 +22,9 @@ MIN_CONTENT_WORDS = 5
 RECURRING_MAX = 2
 # fuzzy-dedup key length: first/last 50 chars of the \W-stripped text
 # (reference O7: fuzz.ratio > 95 on first/last 50 chars,
-# text_models.py:331-374; here the 95-similarity test is replaced by
-# exact key equality, deterministic and O(n) instead of O(n^2))
+# text_models.py:331-374).  Keys are grouped exactly, then near-equal
+# keys merge under fuzzy_close (text._merge_fuzzy_groups), within a
+# per-document comparison budget (FUZZY_MAX_COMPARISONS)
 FUZZY_KEY_LEN = 50
 # a chapter below this many characters is dropped (deterministic stand-in
 # for the reference's spaCy grammar filter F8, text_api.py:229-238)
@@ -56,6 +57,27 @@ BOILER_PATTERNS = [
 # quadratic backtracking).
 BOILER_MAX_WORDS = 30
 BOILER_MAX_CHARS = 2_000
+# lower-case literals of which every BOILER_PATTERNS match holds one
+# ("©" aside, which ASCII text cannot hold).  For ASCII text re.I is
+# plain ASCII case-folding, so text whose lower-case form holds none of
+# them matches no pattern.  Non-ASCII text always runs the patterns:
+# there re.I also folds e.g. "ſ" to "s" and the Kelvin sign to "k".
+_BOILER_LITERALS = (
+    "cookie", "all rights reserved", "share on", "login", "log in",
+    "signup", "sign up", "subscribe", "privacy", "terms", "imprint",
+    "(c) ", "@", "http", "please cite",
+)
+
+
+def is_boilerplate(text: str) -> bool:
+    """True iff one of BOILER_PATTERNS matches text.  Callers gate on
+    BOILER_MAX_CHARS first."""
+    if text.isascii():
+        low = text.lower()
+        if not any(lit in low for lit in _BOILER_LITERALS):
+            return False
+    return any(p.search(text) for p in BOILER_PATTERNS)
+
 
 # headers commonly found in the reference's domain (text_api.py:320-329).
 # Phrases, not words: the reference's loose substring test ("in" ⊂
@@ -95,8 +117,14 @@ def is_common_header(text: str) -> bool:
         return False
     return header_norm(text) in COMMON_HEADERS
 
-_WORD_RE = re.compile(r"\S+")
 _NONWORD_RE = re.compile(r"[\W_]+", re.UNICODE)
+# the ASCII chars _NONWORD_RE matches: on ASCII text, deleting them with
+# str.translate gives the same string in a fraction of the regex's time
+_ASCII_NONWORD = dict.fromkeys(i for i in range(128) if _NONWORD_RE.match(chr(i)))
+
+
+def _strip_nonword(s: str) -> str:
+    return s.translate(_ASCII_NONWORD) if s.isascii() else _NONWORD_RE.sub("", s)
 
 
 def n_words(s: str) -> int:
@@ -113,12 +141,12 @@ _FUZZY_WINDOW = 10 * FUZZY_KEY_LEN
 def fuzzy_key(s: str) -> str:
     """Normalized first/last FUZZY_KEY_LEN chars (reference O7 key)."""
     if len(s) <= 2 * _FUZZY_WINDOW:
-        t = _NONWORD_RE.sub("", s).lower()
+        t = _strip_nonword(s).lower()
         if len(t) <= 2 * FUZZY_KEY_LEN:
             return t
         return t[:FUZZY_KEY_LEN] + t[-FUZZY_KEY_LEN:]
-    head = _NONWORD_RE.sub("", s[:_FUZZY_WINDOW]).lower()
-    tail = _NONWORD_RE.sub("", s[-_FUZZY_WINDOW:]).lower()
+    head = _strip_nonword(s[:_FUZZY_WINDOW]).lower()
+    tail = _strip_nonword(s[-_FUZZY_WINDOW:]).lower()
     return head[:FUZZY_KEY_LEN] + tail[-FUZZY_KEY_LEN:]
 
 
@@ -194,6 +222,8 @@ _SOFT_HYPH_ANY = re.compile(r"­")
 
 
 def dehyphenate(s: str) -> str:
+    if "\xad" not in s:  # most text has no soft hyphen: skip both scans
+        return s
     return _SOFT_HYPH_ANY.sub("", _SOFT_HYPH_JOIN.sub("", s))
 
 
@@ -205,7 +235,14 @@ _ABBREVS = frozenset(
     "et al e.g i.e fig figs tab vs cf dr prof no approx ca eq ref refs "
     "etc jr sr st".split()
 )
-_SPLIT_CAND = re.compile(r"[.!?]+(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
+# a sentence-end candidate is a maximal run of [.!?] followed by
+# whitespace and a capital or digit: the matches of
+# [.!?]+(?=\s+["'(\[]?[A-Z0-9ÄÖÜ]).  It is found from its last char, by
+# one pattern per char: the regex engine skips ahead to a literal first
+# char in a tight loop, but checks a leading repeat of a class position
+# by position (~4x slower over a megabyte block).
+_SPLIT_LOOKAHEAD = r"(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])"
+_SPLIT_ENDS = tuple((c, re.compile(re.escape(c) + _SPLIT_LOOKAHEAD)) for c in ".!?")
 
 
 def _token_before(s: str, pos: int) -> str:
@@ -222,9 +259,14 @@ def split_sentences(s: str) -> list[str]:
     s = s.strip()
     if not s:
         return []
+    ends = [m.end() for c, pat in _SPLIT_ENDS if c in s for m in pat.finditer(s)]
+    ends.sort()
     cuts = []
-    for m in _SPLIT_CAND.finditer(s):
-        tok = _token_before(s, m.start()).lower()
+    for end in ends:
+        start = end - 1  # back to the first char of the run
+        while start and s[start - 1] in ".!?":
+            start -= 1
+        tok = _token_before(s, start).lower()
         bare = tok.rstrip(".").lstrip("([\"'")
         if bare in _ABBREVS:
             continue
@@ -233,10 +275,10 @@ def split_sentences(s: str) -> list[str]:
             continue
         # "et al." — token is "al", previous token "et"
         if bare == "al":
-            prev = _token_before(s, m.start() - len(tok) - 1).lower().lstrip("([\"'")
+            prev = _token_before(s, start - len(tok) - 1).lower().lstrip("([\"'")
             if prev == "et":
                 continue
-        cuts.append(m.end())
+        cuts.append(end)
     parts, lo = [], 0
     for c in cuts:
         part = s[lo:c].strip()

@@ -8,9 +8,12 @@ reference's ``TextBlock`` list (internal_models.py:53-77) with DOM
 position replacing bbox geometry — plus structured table / figure /
 meta captures.
 
-Pure stdlib (html.parser), fully deterministic, never raises for any
-byte input: adversarial payloads surface as ``truncated`` flags or as
-an error captured by the caller (SURVEY §7.4 hard parts 3-4).
+Tokenized by a regex scan (``_fast_feed``, the default) or by stdlib
+``html.parser`` (the reference engine the tests compare against); both
+drive one block-parser state machine.  Fully deterministic, never
+raises for any byte input: adversarial payloads surface as
+``truncated`` flags or as an error captured by the caller (SURVEY §7.4
+hard parts 3-4).
 """
 
 from __future__ import annotations
@@ -221,7 +224,7 @@ class _BlockParser(HTMLParser):
             return
         if self._skip_depth:
             return
-        ad = dict(attrs)
+        ad = dict(attrs) if attrs else {}
         if tag == "html" and ad.get("lang"):
             self.html_lang = (ad.get("lang") or "").strip().lower()[:8]
         if tag == "meta":
@@ -430,7 +433,7 @@ _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
 )
 # tags whose attributes the block parser actually reads
-_ATTR_TAGS = frozenset("meta img html td th a".split())
+_ATTR_TAGS = frozenset("meta img html td th".split())
 # raw-text elements: content is never parsed as markup.  Exactly
 # html.parser's CDATA_CONTENT_ELEMENTS (script/style) for parity —
 # stdlib parses textarea/title content as markup.
@@ -460,50 +463,54 @@ def _parse_attrs(s: str) -> list:
 def _fast_feed(p: _BlockParser, text: str) -> None:
     """Drive the _BlockParser handlers via regex tokenization.  Matches
     stdlib html.parser behaviour for the constructs the block parser
-    consumes (tags, data with charrefs decoded, raw-text elements)."""
+    consumes (tags, data with charrefs decoded, raw-text elements).
+
+    One ``finditer`` scan runs until a raw-text element opens; its
+    content is consumed up to the closing tag and the scan restarts
+    after it."""
+    handle_data = p.handle_data
+    handle_starttag = p.handle_starttag
+    handle_endtag = p.handle_endtag
+    unescape = _html_mod.unescape
     pos = 0
-    n = len(text)
-    while pos < n:
-        m = _TOKEN_RE.search(text, pos)
-        if m is None:
-            data = text[pos:]
-            if data:
-                p.handle_data(_html_mod.unescape(data) if "&" in data else data)
-            break
-        if m.start() > pos:
-            data = text[pos:m.start()]
-            p.handle_data(_html_mod.unescape(data) if "&" in data else data)
-        tag = m.group("tag")
-        if tag is None:
-            pos = m.end()  # comment/doctype/pi: ignored (stdlib parity)
-            continue
-        tag_l = tag.lower()
-        if m.group("end"):
-            p.handle_endtag(tag_l)
+    while True:
+        raw_tag = None
+        for m in _TOKEN_RE.finditer(text, pos):
+            start = m.start()
+            if start > pos:
+                data = text[pos:start]
+                handle_data(unescape(data) if "&" in data else data)
             pos = m.end()
-            continue
-        attrs = _parse_attrs(m.group("attrs")) if tag_l in _ATTR_TAGS else []
-        if m.group("selfclose"):
-            p.handle_startendtag(tag_l, attrs)
-            pos = m.end()
-            continue
-        p.handle_starttag(tag_l, attrs)
-        pos = m.end()
-        if tag_l in _RAW_TEXT:
-            # consume raw content up to the real closing tag without
-            # interpreting '<' inside (script/style/title semantics)
-            em = _RAW_END[tag_l].search(text, pos)
-            if em is None:
-                raw = text[pos:]
-                if raw:
-                    p.handle_data(raw)
-                p.handle_endtag(tag_l)
+            end, tag, attrs, selfclose = m.group(1, 2, 3, 4)
+            if tag is None:
+                continue  # comment/doctype/pi: ignored (stdlib parity)
+            tag = tag.lower()
+            if end:
+                handle_endtag(tag)
+                continue
+            attrs = _parse_attrs(attrs) if tag in _ATTR_TAGS else []
+            if selfclose:
+                p.handle_startendtag(tag, attrs)
+                continue
+            handle_starttag(tag, attrs)
+            if tag in _RAW_TEXT:
+                raw_tag = tag
                 break
-            raw = text[pos:em.start()]
-            if raw:
-                p.handle_data(raw)
-            p.handle_endtag(tag_l)
-            pos = em.end()
+        if raw_tag is None:
+            break
+        # consume raw content up to the real closing tag without
+        # interpreting '<' inside (script/style semantics)
+        em = _RAW_END[raw_tag].search(text, pos)
+        raw = text[pos:] if em is None else text[pos:em.start()]
+        if raw:
+            handle_data(raw)
+        handle_endtag(raw_tag)
+        if em is None:
+            return
+        pos = em.end()
+    if pos < len(text):
+        data = text[pos:]
+        handle_data(unescape(data) if "&" in data else data)
 
 
 def parse_html(raw: bytes, engine: str = "fast") -> ParseResult:

@@ -18,6 +18,24 @@ def test_corpus_equivalence(lo, hi):
         assert parse_html(r["html"], "fast") == parse_html(r["html"], "stdlib"), i
 
 
+@pytest.mark.parametrize("seed", [11, 12])
+def test_benchmark_mix_equivalence(seed):
+    """The page mix of the benchmark (``perfbench.common.page_ids``): exact
+    per-family and per-kind counts, so each seed holds ~1 MB
+    single-paragraph edge pages and pages whose script or style element
+    restarts the fast tokenizer's scan."""
+    from perfbench.common import page_ids
+
+    giants = raw_text = 0
+    for i in page_ids(1500, seed):
+        html = fx.gen_page(i, seed)["html"]
+        body = html or b""
+        giants += len(body) > 1_000_000
+        raw_text += b"<script" in body or b"<style" in body
+        assert parse_html(html, "fast") == parse_html(html, "stdlib"), (seed, i)
+    assert giants >= 4 and raw_text >= 2
+
+
 ADVERSARIAL = [
     b"",
     None,
@@ -38,6 +56,9 @@ ADVERSARIAL = [
     b"<figure><img src=x.png><figcaption>Fig. 1 cap</figcaption></figure>",
     b"<meta name=author content=Jane><meta name='author' content='Bob'>",
     b"<script src=x.js>",  # unclosed raw-text element
+    b"<style>a</style><script>1<2</script><p>x &amp; y</p><script>'</p>'</SCRIPT >tail &lt;",
+    b"<p>a<br/>b</p><style type=x>p{}</style><p>c</p><style></style>",
+    b"<noscript><script>x</script>hidden</noscript><p>shown</p>",  # raw text inside a skipped element
     b"</\xef\xbf\xbdtd><td\xef\xbf\xbd>bogus tags</td>",
 ]
 

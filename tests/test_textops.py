@@ -1,5 +1,11 @@
 """Unit tests for the pure text operators (SURVEY §5.2 item 2)."""
 
+import re
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from document_extraction_service_spark.extract import textops as X
 
 
@@ -36,6 +42,71 @@ class TestSentenceSplit:
         # previous sentence not ending in terminal punctuation merges
         s = "A value of 3.5 was seen. It rose."
         assert X.split_sentences(s) == ["A value of 3.5 was seen.", "It rose."]
+
+
+# the splitter before sentence ends were found by one literal-prefixed
+# pattern per end char; kept as the reference
+_SPLIT_CAND_V1 = re.compile(r"[.!?]+(?=\s+[\"'(\[]?[A-Z0-9ÄÖÜ])")
+
+
+def _split_sentences_v1(s):
+    s = s.strip()
+    if not s:
+        return []
+    cuts = []
+    for m in _SPLIT_CAND_V1.finditer(s):
+        tok = X._token_before(s, m.start()).lower()
+        bare = tok.rstrip(".").lstrip("([\"'")
+        if bare in X._ABBREVS:
+            continue
+        if len(bare) == 1 and bare.isalpha():
+            continue
+        if bare == "al":
+            prev = X._token_before(s, m.start() - len(tok) - 1).lower().lstrip("([\"'")
+            if prev == "et":
+                continue
+        cuts.append(m.end())
+    parts, lo = [], 0
+    for c in cuts:
+        part = s[lo:c].strip()
+        if part:
+            parts.append(part)
+        lo = c
+    tail = s[lo:].strip()
+    if tail:
+        parts.append(tail)
+    merged = []
+    for p in parts:
+        if merged and (merged[-1].endswith("et al.") or merged[-1][-1] not in ".!?"):
+            merged[-1] = merged[-1] + " " + p
+        else:
+            merged.append(p)
+    return merged
+
+
+_SPLIT_FRAGMENTS = [
+    "Smith", "et", "al", "Et", "xet", "e.g", "Fig", "A", "a", "3.5", "word", "Ä", "ö", "9",
+    ".", "..", "!", "?", "?!", "...", "(", "[", '"', "'", " ", "  ", "\n", "\t", "\u00a0",
+    "\u2028", "\x1c", "\u00ad",
+]
+
+
+@pytest.mark.parametrize("s", [
+    "See Fig?! Then more.",  # a run of end chars after an abbreviation
+    "Found by Smith et al!. Next one.",
+    "Dr.. Who? Yes.",
+    "A?! B. C",
+    "e.g... Then on.",
+])
+def test_split_sentences_multi_char_runs(s):
+    assert X.split_sentences(s) == _split_sentences_v1(s)
+
+
+@given(st.lists(st.sampled_from(_SPLIT_FRAGMENTS), max_size=40))
+@settings(max_examples=1000, deadline=None)
+def test_split_sentences_matches_reference(parts):
+    s = "".join(parts)
+    assert X.split_sentences(s) == _split_sentences_v1(s)
 
 
 class TestDehyphenate:
@@ -86,6 +157,12 @@ class TestFuzzyKey:
     def test_doi(self):
         m = X.DOI_RE.findall("see doi:10.1234/abc.def-5 end")
         assert m == ["10.1234/abc.def-5"]
+
+
+@given(st.text(max_size=60) | st.text(alphabet=st.characters(max_codepoint=127), max_size=60))
+@settings(max_examples=500, deadline=None)
+def test_strip_nonword_equals_regex(s):
+    assert X._strip_nonword(s) == X._NONWORD_RE.sub("", s)
 
 
 # --- non-markup header detection (X6, reference text_api.py:285-356) --------
