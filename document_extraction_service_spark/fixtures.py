@@ -606,9 +606,11 @@ def pages_df(spark, n: int, seed: int = SEED, partitions: int | None = None):
     import pandas as pd
 
     from .schema import PAGES_SCHEMA
+    from .udfs import releases_zip_importers
 
     parts = partitions or max(2, spark.sparkContext.defaultParallelism)
 
+    @releases_zip_importers
     def gen(batches):
         for pdf in batches:
             ids = pdf["id"].tolist()

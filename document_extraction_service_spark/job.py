@@ -27,7 +27,9 @@ Scale design (north_rule requirements, mapped):
     tests/test_iceberg.py whenever SPARK_GRAFT_ICEBERG_JARS is set.
   * metrics: n_ok/n_failed derived from the lineage aggregation over
     the committed output (a column-pruned scan; .observe() was measured
-    2x slower on the write stage and removed).
+    2x slower on the write stage and removed).  The aggregate is cached,
+    collected for the totals and appended from the cache as one file
+    (schema.LINEAGE_SCHEMA): no Python task in the lineage pass.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .schema import PAGES_SCHEMA, bucketed_pages_schema
+from .schema import LINEAGE_SCHEMA, PAGES_SCHEMA, bucketed_pages_schema
 from .udfs import extraction_col
 
 DEFAULT_BUCKETS = 128
@@ -168,7 +170,9 @@ def read_pages(spark: SparkSession, spec: str, partitions: int | None = None) ->
 def finished_buckets(spark: SparkSession, lineage_path: str, fingerprint: str) -> list[int]:
     if not os.path.isdir(lineage_path) or not os.listdir(lineage_path):
         return []
-    lin = spark.read.parquet(lineage_path)
+    # declared schema: a bare read would first run a schema-inference
+    # job over every lineage footer, one more file per run (CLAUDE.md #21)
+    lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
     rows = (
         lin.filter(F.col("input_fingerprint") == fingerprint)
         .select("bucket")
@@ -300,21 +304,20 @@ def run_job(
         .withColumn("input_fingerprint", F.lit(fp))
         .withColumn("wall_ms", F.lit(wall_ms))
         .withColumn("committed_at", F.lit(_dt.datetime.now(_dt.timezone.utc)))
-        .select(
-            "run_id", "bucket", "input_fingerprint",
-            "n_ok", "n_failed", "n_truncated", "n_fallback",
-            "wall_ms", "committed_at",
-        )
+        .select([F.col(f.name).cast(f.dataType) for f in LINEAGE_SCHEMA])
     )
-    # the lineage table is <= n_buckets rows by construction: collect
-    # it ONCE (driver-safe, the finished_buckets contract), total it in
-    # Python, and write the collected rows back — one pass over the
-    # committed output instead of two (the previous cache + agg +
-    # cached write ran the totals aggregation as its own job)
-    lineage_rows = lineage.collect()
-    spark.createDataFrame(lineage_rows, lineage.schema).write.mode(
-        "append"
-    ).parquet(lineage_path)
+    # the lineage table is <= n_buckets rows by construction.  Cache the
+    # aggregate, collect it for the totals (driver-safe, the
+    # finished_buckets contract) and write it from the cache as one
+    # file: one scan of the committed output and no Python task
+    # (spark.createDataFrame of the collected rows would run a Python
+    # task per slice and write one file per slice).
+    lineage.persist()
+    try:
+        lineage_rows = lineage.collect()
+        lineage.coalesce(1).write.mode("append").parquet(lineage_path)
+    finally:
+        lineage.unpersist()
     lineage_ms = int((time.time() - t_written) * 1000)
 
     n_rows = sum(r["n_ok"] + r["n_failed"] for r in lineage_rows)

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..udfs import releases_zip_importers
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType(), False),
@@ -141,6 +143,7 @@ def image_features(media: DataFrame, use_fake_decode: bool = True) -> DataFrame:
     the iterator never materializes a partition, and output rows drop
     the payload (features only cross the shuffle)."""
 
+    @releases_zip_importers
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in (
@@ -282,6 +285,7 @@ def audio_features(media: DataFrame, use_fake_decode: bool = True) -> DataFrame:
     anything crosses a shuffle, codec failure degrades to
     decode_ok=false rows."""
 
+    @releases_zip_importers
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in (
@@ -324,6 +328,7 @@ def frame_sample(media: DataFrame, every_k: int = 8,
     payloads — across the shuffle boundary."""
     import hashlib
 
+    @releases_zip_importers
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in (
@@ -382,6 +387,7 @@ def image_resize(media: DataFrame, max_side: int = 256,
     shuffle moves ~100 bytes/row regardless of image size."""
     import hashlib
 
+    @releases_zip_importers
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {k: [] for k in (

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..udfs import releases_zip_importers
 from .tables import read_table, top_k
 
 # Every scored set below has one row per (query_id, neighbor_id), so
@@ -220,6 +221,7 @@ def _signatures_udf(tables: int = LSH_TABLES, planes: int = LSH_MIN_PLANES):
     # overflow IntegerType — the corpus-scaling rule must survive its
     # own design point.
     @F.pandas_udf(T.ArrayType(T.LongType()))
+    @releases_zip_importers
     def sig(embs: pd.Series) -> pd.Series:
         pl = _planes(tables=tables, planes=planes)
         mat = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
@@ -361,6 +363,7 @@ def ann_ivf(spark, sf_dir):
     cell_ids = np.array([cid for cid, _ in cents], dtype=np.int32)
 
     @F.pandas_udf(T.IntegerType())
+    @releases_zip_importers
     def assign(embs: pd.Series) -> pd.Series:
         mat = np.asarray([np.asarray(v, dtype=np.float64) for v in embs])
         if len(mat) == 0:

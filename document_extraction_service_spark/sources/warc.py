@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import PAGES_SCHEMA
+from ..udfs import releases_zip_importers
 
 _CRLF = b"\r\n"
 _SEP = b"\r\n\r\n"
@@ -382,6 +383,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     shape).  Same path-distributed streaming shape as read_warc."""
     cols = ["url", "warc_ts", "text"]
 
+    @releases_zip_importers
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for p in b["path"]:
@@ -409,6 +411,7 @@ def read_warc(
     module docstring for why this is the 100 TB shape."""
     cols = ["url", "warc_ts", "html", "text", "lang"]
 
+    @releases_zip_importers
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for p in b["path"]:

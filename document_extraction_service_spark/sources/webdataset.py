@@ -43,6 +43,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..udfs import releases_zip_importers
+
 DOCS_PER_SHARD = 1000      # WebDataset-typical shard granularity
 WDS_CHUNK_ROWS = 64        # source emission unit (bounded frames)
 
@@ -127,6 +129,7 @@ def write_webdataset(
 
     os.makedirs(out_dir, exist_ok=True)
 
+    @releases_zip_importers
     def build(key: tuple, rows: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
         path = os.path.join(out_dir, f"shard-{shard:06d}.tar")
@@ -232,6 +235,7 @@ def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
     dedup/curation operator directly."""
     cols = ["doc_id", "text", "lang", "source"]
 
+    @releases_zip_importers
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             for p in b["path"]:

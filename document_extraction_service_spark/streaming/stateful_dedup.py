@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..udfs import releases_zip_importers
+
 N_SHARDS_DEFAULT = 64
 MAX_URLS_PER_SHARD = 100_000
 IDLE_TIMEOUT_MS = 24 * 3600 * 1000  # expire shards idle for a day
@@ -64,6 +66,7 @@ STATE_SCHEMA = T.StructType(
 
 
 def _make_dedup_shard(idle_timeout_ms: int | None):
+    @releases_zip_importers
     def _dedup_shard(
         key: Any,
         batches: Iterator[pd.DataFrame],

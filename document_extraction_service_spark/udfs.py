@@ -11,11 +11,18 @@ The iterator form matters: module imports and compiled regexes are
 paid once per Python worker, not per batch — the inversion of the
 reference's per-document spaCy reload
 (/root/reference/app/core/extraction_modul/extraction_model.py:87).
+
+Every Python UDF in the package is wrapped in `releases_zip_importers`
+(CLAUDE.md #25; tests/test_packaging.py enforces it).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import inspect
+import sys
+import zipimport
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -25,7 +32,48 @@ from .extract.pipeline import extract_document
 from .schema import RESULT
 
 
+def releases_zip_importers(fn: Callable) -> Callable:
+    """Wrap a Python UDF so that, when its iterator ends (exhausted,
+    closed or failed) or its call returns, the worker forgets every
+    zipimporter in `sys.path_importer_cache`.
+
+    Spark's worker calls `importlib.invalidate_caches()` at the start
+    of every task; on CPython < 3.12 each cached zipimporter then
+    re-reads its whole archive directory (pyspark.zip: ~9 ms each on a
+    4-vCPU VM, one per imported sub-package, 14+ after a UDF's imports;
+    fixed upstream in 3.12 by gh-103200).  The cache is only a cache: the next import
+    miss rebuilds an entry from `zipimport`'s own directory cache
+    without touching the archive, so the next task on this worker has
+    nothing zip-backed left to invalidate.  The signature passes through
+    (`__signature__`, which `inspect.getfullargspec` also reads): pandas_udf
+    infers the UDF type from the hints, and the grouped-map worker picks
+    `f(rows)` or `f(key, rows)` by the positional argument count."""
+
+    def release() -> None:
+        cache = sys.path_importer_cache
+        for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+            del cache[path]
+
+    if inspect.isgeneratorfunction(fn):
+        @functools.wraps(fn)
+        def run(*args):
+            try:
+                yield from fn(*args)
+            finally:
+                release()
+    else:
+        @functools.wraps(fn)
+        def run(*args):
+            try:
+                return fn(*args)
+            finally:
+                release()
+    run.__signature__ = inspect.signature(fn)
+    return run
+
+
 @F.pandas_udf(RESULT)
+@releases_zip_importers
 def extract_struct_udf(
     it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series]],
 ) -> Iterator[pd.DataFrame]:

@@ -1,10 +1,13 @@
 """Job-level tests: lineage, resume, idempotence (SURVEY §5.2 item 5,
 FIXTURES.md §5)."""
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
 from document_extraction_service_spark.job import run_job
+from document_extraction_service_spark.schema import LINEAGE_SCHEMA
 
 N = 200
 BUCKETS = 16
@@ -13,6 +16,20 @@ BUCKETS = 16
 @pytest.fixture()
 def dirs(tmp_path):
     return str(tmp_path / "out"), str(tmp_path / "lineage")
+
+
+def _lineage_files(lin):
+    return sorted(glob.glob(f"{lin}/*.parquet"))
+
+
+def _lineage_by_bucket(spark, lin, run_id):
+    rows = (
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lin)
+        .filter(F.col("run_id") == run_id)
+        .collect()
+    )
+    return {r["bucket"]: (r["n_ok"], r["n_failed"], r["n_truncated"], r["n_fallback"])
+            for r in rows}
 
 
 def test_full_run_counts(spark, dirs):
@@ -25,6 +42,31 @@ def test_full_run_counts(spark, dirs):
     assert df.select("url").distinct().count() == N
     lineage = spark.read.parquet(lin)
     assert lineage.agg(F.sum("n_ok")).collect()[0][0] == N
+
+
+def test_each_run_appends_one_lineage_file_matching_output(spark, dirs):
+    """Every run_job adds exactly one lineage file; its rows count the
+    committed output bucket by bucket and sum to the returned totals."""
+    out, lin = dirs
+    for k, run_id in enumerate(("t-a", "t-b"), start=1):
+        m = run_job(spark, f"synthetic:{N}", out, lin, run_id, n_buckets=BUCKETS)
+        assert len(_lineage_files(lin)) == k
+        lineage = _lineage_by_bucket(spark, lin, run_id)
+        committed = {
+            r["bucket"]: (r["n_ok"], r["n_failed"], r["n_truncated"], r["n_fallback"])
+            for r in spark.read.parquet(out).groupBy("bucket").agg(
+                F.sum(F.col("status.ok").cast("long")).alias("n_ok"),
+                F.sum((~F.col("status.ok")).cast("long")).alias("n_failed"),
+                F.sum(F.col("status.truncated").cast("long")).alias("n_truncated"),
+                F.sum(F.col("status.fallback").cast("long")).alias("n_fallback"),
+            ).collect()
+        }
+        assert lineage == committed
+        assert len(lineage) == BUCKETS
+        assert sum(ok + failed for ok, failed, _, _ in lineage.values()) == m["n_rows"] == N
+        assert sum(v[0] for v in lineage.values()) == m["n_ok"]
+        assert sum(v[2] for v in lineage.values()) == m["n_truncated"]
+        assert sum(v[3] for v in lineage.values()) == m["n_fallback"]
 
 
 def test_kill_and_resume_equals_clean_run(spark, dirs, tmp_path):
@@ -40,6 +82,10 @@ def test_kill_and_resume_equals_clean_run(spark, dirs, tmp_path):
                  n_buckets=BUCKETS, resume=True)
     assert set(m2["skipped_buckets"]) == set(half)
     assert m1["n_rows"] + m2["n_rows"] == N
+    # one lineage file per run; the resumed run records only the rest
+    assert len(_lineage_files(lin)) == 2
+    assert set(_lineage_by_bucket(spark, lin, "t-part")) == set(half)
+    assert set(_lineage_by_bucket(spark, lin, "t-resume")) == set(range(BUCKETS)) - set(half)
 
     resumed = spark.read.parquet(out)
     assert resumed.count() == N
